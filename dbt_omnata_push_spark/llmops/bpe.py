@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .gate import checkpoint_gate
+
 DEFAULT_MERGES = 8
 
 
@@ -78,16 +80,6 @@ def _pairs(seq_col):
 
 DEFAULT_CHECKPOINT_EVERY = 16
 
-# Vocab-size ceiling for the driver-local merge loop. BPE's iterations
-# run on the DISTINCT-WORD table, which is orders of magnitude smaller
-# than the corpus (a 100 TB web corpus has ~10^7-10^8 word types); when
-# it fits the driver comfortably, 256 sequential Spark jobs of ~0.1s
-# scheduling each lose to a local loop by ~10x — the same adaptive
-# choice production tokenizer trainers make. The corpus-sized word
-# COUNT stays distributed either way; only the vocab-sized merge loop
-# moves. Semantics are bit-identical (test_bpe_local_equals_distributed).
-DEFAULT_LOCAL_VOCAB_LIMIT = 1_000_000
-
 
 def bpe_train_local(
     word_freqs: list, n_merges: int
@@ -126,7 +118,7 @@ def bpe_train(
     freq_col: str = "freq",
     checkpoint_every: int = DEFAULT_CHECKPOINT_EVERY,
     return_state: bool = False,
-    local_vocab_limit: int = DEFAULT_LOCAL_VOCAB_LIMIT,
+    local_limit: int = 1_000_000,
 ):
     """Learn ``n_merges`` merges; returns [(round, sym_a, sym_b, count)].
 
@@ -141,29 +133,26 @@ def bpe_train(
     classic iterative-algorithm lineage blowup, same fix as the
     PageRank loop (llmops/dedup.py). Lineage boundedness is pinned by
     tests/test_curation_round5b.py (plan-size plateau test).
+
+    A vocab of at most ``local_limit`` words trains in the driver-local
+    loop (identical merges, ~10x faster; see llmops/gate.py);
+    ``local_limit=0`` forces the distributed loop, and ``return_state``
+    always runs it, since it hands back a frame.
     """
-    # Adaptive engine choice (r6): probe the vocab size with one
-    # limit-collect job; a vocab under the driver budget trains locally
-    # (identical merges, ~10x faster — see DEFAULT_LOCAL_VOCAB_LIMIT).
-    # Pass local_vocab_limit=0 to force the distributed loop
-    # (return_state always runs distributed — it hands back a frame).
-    if local_vocab_limit and not return_state:
-        probe = (
-            words.select(word_col, freq_col)
-            .limit(local_vocab_limit + 1)
-            .collect()
+    # The vocab is materialized once either way, so the corpus-sized
+    # word count feeding ``words`` runs once; each distributed round
+    # replays only its vocab-sized rewrite chain since the last
+    # checkpoint.
+    vocab, local = checkpoint_gate(
+        words.select(word_col, freq_col), -1 if return_state else local_limit
+    )
+    if local is not None:
+        return bpe_train_local(
+            list(zip(local[word_col], local[freq_col])), n_merges
         )
-        if len(probe) <= local_vocab_limit:
-            return bpe_train_local(
-                [(r[0], int(r[1])) for r in probe], n_merges
-            )
-    # Persist the char-split vocab: without it every round's collect()
-    # re-executes the corpus-sized word count feeding ``words``. With
-    # the cache, the corpus is scanned once and each round replays only
-    # its (vocab-sized) rewrite chain since the last checkpoint.
-    seq = words.select(
+    seq = vocab.select(
         word_col, freq_col, _char_seq(F.col(word_col)).alias("seq")
-    ).persist()
+    )
     to_release = seq
     merges: list[tuple[int, str, str, int]] = []
     for rnd in range(1, n_merges + 1):

@@ -14,11 +14,11 @@ DuckDB oracle reproduces them bit-for-bit).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
+
+from .gate import checkpoint_gate
 
 DEFAULT_NUM_PERM = 8
 DEFAULT_BAND_SIZE = 2
@@ -383,7 +383,7 @@ DUCKDB_WORDS_CLAUSE = "SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM 
 # The apply-step after pair mining: every doc gets the min doc_id of its
 # duplicate cluster, so "keep one per cluster" is a single filter.
 # ---------------------------------------------------------------------------
-def _cc_local(pairs: DataFrame) -> DataFrame:
+def _cc_local(pairs: DataFrame, pdf) -> DataFrame:
     """Exact connected components for a driver-sized edge list: Arrow
     collect, numpy min-label propagation with full pointer jumping
     between rounds (labels chase their own labels to fixpoint, so the
@@ -401,7 +401,6 @@ def _cc_local(pairs: DataFrame) -> DataFrame:
             StructField("component", pairs.schema["b"].dataType, True),
         ]
     )
-    pdf = pairs.toPandas()
     if len(pdf) == 0:
         return spark.createDataFrame([], schema)
     idx = pd.Index(
@@ -436,14 +435,16 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    local_edge_limit: int | None = None,
+    local_limit: int = 4_000_000,
 ) -> DataFrame:
     """Min-label propagation over an undirected edge list.
 
     Returns (node, component) where component = min node id reachable.
     Each iteration is one shuffle (join on node + min-agg); convergence
-    needs O(component diameter) rounds. Three scale/latency choices
-    (measured together: 3.2s -> 0.6s at sf0.1):
+    needs O(component diameter) rounds; the distributed path raises
+    RuntimeError when ``max_iter`` rounds leave labels still changing.
+    Three scale/latency choices (measured together: 3.2s -> 0.6s at
+    sf0.1):
     - init fuses round 1: labels start at min(node, min neighbour) from
       a single aggregation, no join — near-dup clusters are stars around
       a canonical doc, so most runs converge after ONE verification
@@ -460,39 +461,21 @@ def connected_components(
     """
     from pyspark.sql import Observation
 
-    # Materialize the mined edge list ONCE (it is read every iteration
-    # either way), riding an edge/null count on the same job. The count
-    # gates a size-adaptive execution choice (r16, guide §1.2 step 1 —
-    # the best distributed algorithm for a small intermediate is no
-    # distribution; same posture as the BPE local/distributed path):
-    # label propagation costs O(diameter) whole Spark rounds of
-    # scheduling + checkpoint overhead, while a pair graph that fits
-    # comfortably on the driver (default 4M edges ~ 64 MB of id pairs,
-    # the broadcast-join trade) resolves exactly in one vectorized
-    # numpy min-label + pointer-jumping loop. Identical fixpoint: the
-    # min reachable id per node is unique, so both paths return the
-    # same rows. The distributed path remains for real corpus-scale
-    # graphs and for edge ids containing NULLs (the driver path would
-    # have to special-case them; the safe direction is to not take it).
-    if local_edge_limit is None:
-        local_edge_limit = int(
-            os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "4000000")
-        )
-    eobs = Observation()
-    pairs = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .observe(
-            eobs,
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(
-                F.col("a").isNull() | F.col("b").isNull()
-            ).alias("nulls"),
-        )
-        .localCheckpoint(eager=True)
+    # Size-adaptive execution (guide §1.2 step 1 — the best distributed
+    # algorithm for a small intermediate is no distribution): label
+    # propagation costs O(diameter) whole Spark rounds, while a pair
+    # graph under ``local_limit`` edges (4M ~ 64 MB of id pairs, the
+    # broadcast-join trade) resolves exactly in one vectorized numpy
+    # min-label + pointer-jumping loop. Identical fixpoint: the min
+    # reachable id per node is unique, so both paths return the same
+    # rows. ``local_limit=0`` forces the distributed rounds.
+    pairs, pdf = checkpoint_gate(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+        local_limit,
+        ("a", "b"),
     )
-    em = eobs.get
-    if int(em["n"] or 0) <= local_edge_limit and not int(em["nulls"] or 0):
-        return _cc_local(pairs)
+    if pdf is not None:
+        return _cc_local(pairs, pdf)
     # Persisted ALREADY hash-partitioned on the join key (r15, guide
     # §2.4): each round's edge⋈labels join then reuses the cached
     # partitioning instead of re-exchanging the edge list every
@@ -526,7 +509,8 @@ def connected_components(
         )
         .localCheckpoint(eager=True)
     )
-    for it in range(max_iter):
+    changed = 0
+    for _ in range(max_iter):
         # One job per round (r15, guide §2.4 — was: neighbour-min join +
         # agg + a second LEFT join back to labels, ~5 exchanges): the
         # neighbour messages UNION a tagged copy of the labels
@@ -566,6 +550,14 @@ def connected_components(
         if changed == 0:
             break
     both.unpersist()
+    if changed:
+        # Labels that still change are not yet min-reachable: returning
+        # them would be wrong components, silently.
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds (component diameter exceeds "
+            f"the cap); raise max_iter"
+        )
     return labels
 
 
@@ -639,7 +631,9 @@ def incremental_dedup_against_index(
     )
 
 
-def _pagerank_local(pairs: DataFrame, iters: int, scale: int) -> DataFrame:
+def _pagerank_local(
+    pairs: DataFrame, pdf, iters: int, scale: int
+) -> DataFrame:
     """Driver-local twin of the distributed rounds below: identical
     integer recurrence (BIGINT div == int64 floor-div for the
     non-negative ranks), distinct directed edges, deg >= 1 nodes."""
@@ -653,7 +647,6 @@ def _pagerank_local(pairs: DataFrame, iters: int, scale: int) -> DataFrame:
             StructField("rank", LongType(), True),
         ]
     )
-    pdf = pairs.toPandas()
     if len(pdf) == 0:
         return spark.createDataFrame([], schema)
     idx = pd.Index(
@@ -686,6 +679,7 @@ def pair_graph_pagerank(
     scale: int = 1_000_000,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
+    local_limit: int = 4_000_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank over the (undirected) near-dup pair
     graph — ranks the 'hub' documents of duplicate neighborhoods (the
@@ -699,33 +693,19 @@ def pair_graph_pagerank(
     lineage is truncated per round with localCheckpoint, same as
     connected_components. Nodes are pair members only; deg >= 1 always.
     """
-    from pyspark.sql import Observation
-
-    # Size-adaptive execution (r16, same gate and rationale as
+    # Size-adaptive execution (same gate and rationale as
     # connected_components): the recurrence is INTEGER arithmetic
     # (div/sum on BIGINT), which numpy int64 reproduces bit-exactly,
-    # so a driver-sized pair graph runs all iterations in vectorized
-    # numpy instead of iters Spark rounds of join+agg+checkpoint. The
-    # mined pairs materialize once either way; NULL ids or a big graph
-    # keep the distributed rounds.
-    local_limit = int(
-        os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "4000000")
+    # so a pair graph under ``local_limit`` edges runs all iterations
+    # in vectorized numpy instead of iters Spark rounds of
+    # join+agg+checkpoint. ``local_limit=0`` forces the Spark rounds.
+    pairs, pdf = checkpoint_gate(
+        pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")),
+        local_limit,
+        ("a", "b"),
     )
-    pobs = Observation()
-    pairs = (
-        pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-        .observe(
-            pobs,
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(
-                F.col("a").isNull() | F.col("b").isNull()
-            ).alias("nulls"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    pm = pobs.get
-    if int(pm["n"] or 0) <= local_limit and not int(pm["nulls"] or 0):
-        return _pagerank_local(pairs, iters, scale)
+    if pdf is not None:
+        return _pagerank_local(pairs, pdf, iters, scale)
     # Both edge directions come from ONE evaluation of the (possibly
     # expensive) pairs input via explode — a union of two selects would
     # re-run the upstream pair-mining pipeline once per branch.
@@ -772,89 +752,6 @@ def pair_graph_pagerank(
             .localCheckpoint(eager=False)
         )
     return ranks.select(F.col("node").alias("doc_id"), F.col("rank"))
-
-
-def pair_graph_pagerank_converged(
-    pairs: DataFrame,
-    tol: int | None = None,
-    max_iter: int = 50,
-    scale: int = 1_000_000,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> tuple[DataFrame, int]:
-    """Production PageRank: same integer recurrence as
-    ``pair_graph_pagerank``, but the loop stops when the largest
-    per-node rank change falls to ``tol`` (default scale/10000 = 0.01%)
-    instead of running a caller-guessed fixed count — graphs with small
-    diameters stop early, deep chains run as long as they need.
-
-    The rank-delta check rides the round's materializing action via the
-    Observation API (the connected_components machinery): each round
-    costs exactly one job, no extra comparison pass over the ranks.
-    Returns ``(ranks_df, rounds_run)``. The fixed-``iters`` variant
-    stays the oracle mode — a deterministic iteration count is what
-    makes the result expressible as unrolled SQL CTEs.
-    """
-    from pyspark.sql import Observation
-
-    if tol is None:
-        tol = max(1, scale // 10_000)
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(b_col).alias("src"), F.col(a_col).alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
-        .persist()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    base = (15 * scale) // 100
-    ranks = deg.select(
-        F.col("src").alias("node"), "deg", F.lit(scale).cast("long").alias("rank")
-    ).localCheckpoint(eager=True)
-    rounds = 0
-    for _ in range(max_iter):
-        contrib = (
-            edges.join(
-                ranks.select(F.col("node").alias("src"), "deg", "rank"), "src"
-            )
-            .select("dst", F.expr("rank div deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("c"))
-        )
-        obs = Observation()
-        new_ranks = (
-            ranks.join(contrib, ranks.node == contrib.dst, "left")
-            .select(
-                "node",
-                "deg",
-                F.col("rank").alias("_old"),
-                (F.lit(base) + F.expr("(85 * coalesce(c, 0)) div 100"))
-                .cast("long")
-                .alias("rank"),
-            )
-            .observe(
-                obs, F.max(F.abs(F.col("rank") - F.col("_old"))).alias("delta")
-            )
-            .drop("_old")
-            .localCheckpoint(eager=True)  # metric rides this job
-        )
-        rounds += 1
-        delta = obs.get["delta"]
-        ranks = new_ranks
-        if delta is None or delta <= tol:
-            break
-    edges.unpersist()
-    return ranks.select(F.col("node").alias("doc_id"), F.col("rank")), rounds
 
 
 def block_dedup_rebuild(

@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .gate import checkpoint_gate
+
 
 def pq_train(
     emb: DataFrame,
@@ -51,7 +53,7 @@ def pq_train(
     max_iter: int = 6,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    local_vector_limit: int = 65536,
+    local_limit: int = 65536,
 ) -> list:
     """Train per-subvector codebooks; returns m lists of k centroids
     (each of dim/m floats). Driver state: m*k*(d/m) = k*d floats.
@@ -68,44 +70,31 @@ def pq_train(
     Adaptive execution (the llmops/bpe.py pattern): PQ codebooks are
     usually trained on a SAMPLE, not the corpus — FAISS trains on
     ~max(10k, 256*k) vectors — so when the training set fits a driver
-    budget (``local_vector_limit`` vectors; 65536 x 1024 dims x 8B =
-    0.5 GiB worst case) the whole Lloyd loop runs in one numpy matrix
-    per iteration with zero per-iteration Spark jobs (measured 5.6s ->
-    ~1.5s at sf0.1). ``local_vector_limit=0`` forces the distributed
-    loop — the shape for training on an unsampled 100 TB corpus.
+    budget (``local_limit`` vectors; 65536 x 1024 dims x 8B = 0.5 GiB
+    worst case) the whole Lloyd loop runs in one numpy matrix per
+    iteration with zero per-iteration Spark jobs (measured 5.6s ->
+    ~1.5s at sf0.1). ``local_limit=0`` forces the distributed loop —
+    the shape for training on an unsampled 100 TB corpus.
     """
     import numpy as np
     import pandas as pd
 
-    # ONE bounded action decides the adaptive path AND feeds the local
-    # loop (r16, guide §1.2 — was: init collect + count + data collect
-    # = 3 driver jobs before any training): collect up to limit+1
-    # (id, vec) rows; fitting under the budget IS the old count gate,
-    # and the k lowest-id init rows fall out of a numpy sort. The
-    # distributed path keeps its own orderBy-init collect (its probe
-    # rows are an arbitrary subset, not the lowest ids).
-    probe = (
-        emb.select(id_col, vec_col).limit(local_vector_limit + 1).collect()
-        if local_vector_limit
-        else []
-    )
-    if local_vector_limit and len(probe) <= local_vector_limit:
-        if len(probe) < k:
+    vecs, local = checkpoint_gate(emb.select(id_col, vec_col), local_limit)
+    if local is not None:
+        if len(local) < k:
             raise ValueError(f"need >= {k} vectors to init {k} codes")
-        dim = len(probe[0][1])
+        full = np.stack(
+            [np.asarray(v, dtype="float64") for v in local[vec_col]]
+        )
+        dim = full.shape[1]
         if dim % m != 0:
             raise ValueError(f"dim {dim} not divisible by m={m} subvectors")
         sub = dim // m
-        full = np.stack(
-            [np.asarray(r[1], dtype="float64") for r in probe]
-        )
-        # mat keeps COLLECT order (np.mean sums per-code rows in row
-        # order — keep it stable vs the prior data collect); only the
-        # init picks the k lowest-id rows, ascending, like orderBy.
-        order = np.argsort(
-            np.asarray([r[0] for r in probe]), kind="stable"
-        )
-        mat = full.reshape(len(probe), m, sub)
+        # mat keeps the checkpoint's partition order (np.mean sums
+        # per-code rows in row order); only the init picks the k
+        # lowest-id rows, ascending, like the distributed orderBy.
+        order = np.argsort(local[id_col].to_numpy(), kind="stable")
+        mat = full.reshape(len(local), m, sub)
         books = (
             full[order[:k]].reshape(k, m, sub).transpose(1, 0, 2).copy()
         )  # m x k x sub
@@ -119,7 +108,7 @@ def pq_train(
                     books[j, code] = mat[mask, j, :].mean(axis=0)
         return [[list(map(float, c)) for c in books[j]] for j in range(m)]
 
-    init = emb.orderBy(id_col).limit(k).select(vec_col).collect()
+    init = vecs.orderBy(id_col).limit(k).select(vec_col).collect()
     if len(init) < k:
         raise ValueError(f"need >= {k} vectors to init {k} codes")
     dim = len(init[0][0])
@@ -139,71 +128,68 @@ def pq_train(
         ]
     )
 
-    src = emb.select(vec_col).persist()
+    src = vecs.select(vec_col)
     n_parts = src.rdd.getNumPartitions()
-    try:
-        for _ in range(max_iter):
-            b = books
-            b_sq = (b ** 2).sum(axis=2)  # m x k
+    for _ in range(max_iter):
+        b = books
+        b_sq = (b ** 2).sum(axis=2)  # m x k
 
-            def partials(batches, b=b, b_sq=b_sq):
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    mat = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-                    parts = mat.reshape(len(mat), m, sub)
-                    cross = np.einsum("nms,mks->nmk", parts, b)
-                    codes = (b_sq[None, :, :] - 2.0 * cross).argmin(axis=2)
-                    out = {"j": [], "code": [], "cnt": [], "sums": []}
-                    for j in range(m):
-                        cj = codes[:, j]
-                        for code in np.unique(cj):
-                            mask = cj == code
-                            out["j"].append(j)
-                            out["code"].append(int(code))
-                            out["cnt"].append(int(mask.sum()))
-                            out["sums"].append(parts[mask, j, :].sum(axis=0))
-                    yield pd.DataFrame(out)
+        def partials(batches, b=b, b_sq=b_sq):
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                mat = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+                parts = mat.reshape(len(mat), m, sub)
+                cross = np.einsum("nms,mks->nmk", parts, b)
+                codes = (b_sq[None, :, :] - 2.0 * cross).argmin(axis=2)
+                out = {"j": [], "code": [], "cnt": [], "sums": []}
+                for j in range(m):
+                    cj = codes[:, j]
+                    for code in np.unique(cj):
+                        mask = cj == code
+                        out["j"].append(j)
+                        out["code"].append(int(code))
+                        out["cnt"].append(int(mask.sum()))
+                        out["sums"].append(parts[mask, j, :].sum(axis=0))
+                yield pd.DataFrame(out)
 
-            raw = src.mapInPandas(partials, part_schema)
-            # Each batch pre-reduces to <= m*k rows, so the global
-            # reduce is over #batches * m * k rows. When that frame is
-            # collect-sized (true on any single-machine run and on
-            # clusters up to ~200 input partitions at m=16,k=64) the
-            # per-iteration shuffle+agg round trip costs more in job
-            # scheduling than the reduction itself — fold driver-side
-            # in numpy instead (measured 7.3s -> ~3s for 4 iterations
-            # at sf0.1). Bigger inputs keep the distributed map-side-
-            # partial groupBy, which is the 100 TB shape.
-            cnt_acc = np.zeros((m, k), dtype="int64")
-            sum_acc = np.zeros((m, k, sub), dtype="float64")
-            if n_parts * m * k <= 250_000:
-                for r in raw.collect():
-                    cnt_acc[r["j"], r["code"]] += r["cnt"]
-                    sum_acc[r["j"], r["code"]] += np.asarray(r["sums"])
-            else:
-                stats = (
-                    raw.groupBy("j", "code")
-                    .agg(
-                        F.sum("cnt").alias("n"),
-                        *[
-                            F.sum(F.col("sums")[i]).alias(f"s{i}")
-                            for i in range(sub)
-                        ],
-                    )
-                    .collect()
+        raw = src.mapInPandas(partials, part_schema)
+        # Each batch pre-reduces to <= m*k rows, so the global
+        # reduce is over #batches * m * k rows. When that frame is
+        # collect-sized (true on any single-machine run and on
+        # clusters up to ~200 input partitions at m=16,k=64) the
+        # per-iteration shuffle+agg round trip costs more in job
+        # scheduling than the reduction itself — fold driver-side
+        # in numpy instead (measured 7.3s -> ~3s for 4 iterations
+        # at sf0.1). Bigger inputs keep the distributed map-side-
+        # partial groupBy, which is the 100 TB shape.
+        cnt_acc = np.zeros((m, k), dtype="int64")
+        sum_acc = np.zeros((m, k, sub), dtype="float64")
+        if n_parts * m * k <= 250_000:
+            for r in raw.collect():
+                cnt_acc[r["j"], r["code"]] += r["cnt"]
+                sum_acc[r["j"], r["code"]] += np.asarray(r["sums"])
+        else:
+            stats = (
+                raw.groupBy("j", "code")
+                .agg(
+                    F.sum("cnt").alias("n"),
+                    *[
+                        F.sum(F.col("sums")[i]).alias(f"s{i}")
+                        for i in range(sub)
+                    ],
                 )
-                for r in stats:
-                    cnt_acc[r["j"], r["code"]] = r["n"]
-                    sum_acc[r["j"], r["code"]] = [
-                        r[f"s{i}"] for i in range(sub)
-                    ]
-            new_books = books.copy()  # empty codes keep their centroid
-            nz = cnt_acc > 0
-            new_books[nz] = sum_acc[nz] / cnt_acc[nz][:, None]
-            books = new_books
-    finally:
-        src.unpersist()
+                .collect()
+            )
+            for r in stats:
+                cnt_acc[r["j"], r["code"]] = r["n"]
+                sum_acc[r["j"], r["code"]] = [
+                    r[f"s{i}"] for i in range(sub)
+                ]
+        new_books = books.copy()  # empty codes keep their centroid
+        nz = cnt_acc > 0
+        new_books[nz] = sum_acc[nz] / cnt_acc[nz][:, None]
+        books = new_books
     return [[list(map(float, c)) for c in books[j]] for j in range(m)]
 
 

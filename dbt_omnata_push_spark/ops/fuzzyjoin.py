@@ -157,11 +157,13 @@ def fuzzy_self_pairs(
     # pair shares many deletion variants here, so the un-deduped
     # candidate stream multiplied the rejoin+Levenshtein work by more
     # than the distinct costs. The early distinct stays.)
+    # No broadcast hint on the string lookups: they grow with the
+    # table, so AQE decides from their runtime size.
     sa = base.select(F.col("_id").alias("id_a"), F.col("_s").alias("_sa"))
     sb = base.select(F.col("_id").alias("id_b"), F.col("_s").alias("_sb"))
     return (
-        cand.join(F.broadcast(sa), "id_a")
-        .join(F.broadcast(sb), "id_b")
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
         .withColumn("dist", F.levenshtein("_sa", "_sb"))
         .filter(F.col("dist") <= max_dist)
         .select("id_a", "id_b", "dist")

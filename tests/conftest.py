@@ -58,7 +58,6 @@ SLOW_TESTS = {
     "tests/test_ivm_minmax.py::test_minmax_property_equals_rebuild",
     "tests/test_ivm_minmax.py::test_moments_property_equals_rebuild",
     "tests/test_oracle_strictness.py::test_registry_oracles_all_tz_naive",
-    "tests/test_plans.py::test_no_forced_broadcast_on_scale_growing_tables",
     "tests/test_property_dml.py::test_dml_sequence_matches_python_replay",
     "tests/test_property_round5.py::TestBpeProperty::test_matches_reference",
     "tests/test_property_round5.py::TestFuzzyJoinProperty::test_matches_bruteforce",
@@ -77,7 +76,6 @@ SLOW_TESTS = {
     "tests/test_push_stream.py::test_stream_push_per_batch_jobs_and_logs",
     "tests/test_resilience.py::test_failed_records_are_repushed_next_run",
     "tests/test_reverse_etl_dag.py::TestReverseEtlDag::test_full_cycle",
-    "tests/test_scale_ops.py::test_pagerank_convergence_stops_by_graph_shape",
     "tests/test_snapshot.py::test_scd2_temporal_join_matches_at_most_one_version",
     "tests/test_snapshot.py::test_snapshot_at_reconstructs_each_round",
     "tests/test_sql_model_push.py::test_sql_dialect_push_end_to_end",

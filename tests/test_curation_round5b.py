@@ -101,9 +101,9 @@ class TestBpe:
         from dbt_omnata_push_spark.llmops.bpe import bpe_train
 
         words = spark.createDataFrame(rows, "word string, freq long")
-        # local_vocab_limit=0: these pin the DISTRIBUTED loop's
+        # local_limit=0: these pin the DISTRIBUTED loop's
         # semantics (the adaptive local path is verified separately)
-        return bpe_train(words, n_merges=n, local_vocab_limit=0)
+        return bpe_train(words, n_merges=n, local_limit=0)
 
     def test_hand_computed_merges(self, spark):
         # 'ab' x10, 'abc' x5: round 1 merges (a,b) count 15; round 2
@@ -345,9 +345,9 @@ class TestBpeDeep:
             "word string, freq long",
         )
         assert bpe_train(
-            words, n_merges=20, checkpoint_every=4, local_vocab_limit=0
+            words, n_merges=20, checkpoint_every=4, local_limit=0
         ) == bpe_train(
-            words, n_merges=20, checkpoint_every=0, local_vocab_limit=0
+            words, n_merges=20, checkpoint_every=0, local_limit=0
         )
 
     def test_deep_prefix_equals_shallow_run(self, spark, sf_dir):
@@ -377,7 +377,7 @@ class TestBpeAdaptive:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("text")
         words = word_freq_table(docs)
         local = bpe_train(words, n_merges=24)  # gate fires (tiny vocab)
-        dist = bpe_train(words, n_merges=24, local_vocab_limit=0)
+        dist = bpe_train(words, n_merges=24, local_limit=0)
         assert local == dist and len(local) == 24
 
     def test_gate_forces_distributed_above_limit(self, spark):
@@ -387,6 +387,6 @@ class TestBpeAdaptive:
             [("ab", 10), ("abc", 5), ("bcd", 2)], "word string, freq long"
         )
         # limit below vocab size -> distributed loop; results identical
-        assert bpe_train(words, n_merges=3, local_vocab_limit=1) == bpe_train(
+        assert bpe_train(words, n_merges=3, local_limit=1) == bpe_train(
             words, n_merges=3
         )

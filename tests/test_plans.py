@@ -130,28 +130,35 @@ def test_customer_order_distribution_outer_join_preserved(spark, sf_dir):
 
 
 def _broadcast_hint_subtrees(df) -> list[str]:
-    """toString() of every ResolvedHint subtree in the analyzed plan."""
-    out = []
-    stack = [df._jdf.queryExecution().analyzed()]
+    """toString() of every ResolvedHint subtree in the analyzed plan,
+    plus the root paths of the files it scans (a file relation prints
+    no path), except files read under a 1-row global aggregate."""
+    out, stack = [], [(df._jdf.queryExecution().analyzed(), None)]
     while stack:
-        node = stack.pop()
-        if node.getClass().getSimpleName() == "ResolvedHint":
+        node, hint = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "ResolvedHint":
+            hint = len(out)
             out.append(node.toString())
+        elif kind == "Aggregate" and node.groupingExpressions().isEmpty():
+            hint = None
+        elif kind == "LogicalRelation" and hint is not None:
+            out[hint] += node.relation().location().rootPaths().toString()
         it = node.children().iterator()
         while it.hasNext():
-            stack.append(it.next())
+            stack.append((it.next(), hint))
     return out
 
 
 def test_no_forced_broadcast_on_scale_growing_tables(spark, sf_dir):
     """VERDICT r2: a forced F.broadcast() hint bypasses AQE's size check;
-    supplier/part grow linearly with scale factor (~1e9 rows at 100 TB)
-    and the token->df vocab grows with the corpus, so no broadcast-hint
-    subtree may scan them. Bounded dims (nation, region, 1-row aggregates)
-    may keep their hints."""
+    supplier/part/customer/orders/lineitem grow linearly with scale
+    factor (~1e9 rows at 100 TB) and the token->df vocab grows with the
+    corpus, so no broadcast-hint subtree may scan them. Bounded dims
+    (nation, region, 1-row aggregates) may keep their hints."""
     import re
 
-    suspect = re.compile(r"/(supplier|part)\.parquet")
+    suspect = re.compile(r"/(supplier|part|customer|orders|lineitem)\.parquet")
     for name in (
         "min_cost_supplier",
         "nation_market_share",
@@ -166,6 +173,8 @@ def test_no_forced_broadcast_on_scale_growing_tables(spark, sf_dir):
         "text_tfidf_top_terms",
         "supplier_regions",
         "top_revenue_supplier",
+        "customers_fuzzy_name_pairs",
+        "customers_entity_resolution",
     ):
         if name not in REGISTRY:
             continue

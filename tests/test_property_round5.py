@@ -97,8 +97,8 @@ class TestBpeProperty:
         words = spark.createDataFrame(
             list(word_freqs.items()), "word string, freq long"
         )
-        # distributed loop (local_vocab_limit=0) vs the reference; the
+        # distributed loop (local_limit=0) vs the reference; the
         # adaptive local path is the same algorithm by construction and
         # is cross-checked in test_curation_round5b.TestBpeAdaptive.
-        got = bpe_train(words, n_merges=4, local_vocab_limit=0)
+        got = bpe_train(words, n_merges=4, local_limit=0)
         assert got == _ref_bpe(word_freqs, 4), word_freqs

@@ -172,7 +172,7 @@ def test_pq_train_local_and_distributed_paths_agree(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     local = PQ.pq_train(df, m=4, k=8, max_iter=3)
-    dist = PQ.pq_train(df, m=4, k=8, max_iter=3, local_vector_limit=0)
+    dist = PQ.pq_train(df, m=4, k=8, max_iter=3, local_limit=0)
     a = np.asarray(local, dtype="float64")
     b = np.asarray(dist, dtype="float64")
     assert a.shape == b.shape

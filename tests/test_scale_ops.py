@@ -202,7 +202,7 @@ def test_connected_components_local_equals_distributed(spark):
     }
     dist = {
         (r["node"], r["component"])
-        for r in connected_components(df, local_edge_limit=0).collect()
+        for r in connected_components(df, local_limit=0).collect()
     }
     assert local == dist and len(local) > 0
     # string ids: sorted-rank mapping must match Spark's string min
@@ -216,9 +216,26 @@ def test_connected_components_local_equals_distributed(spark):
     }
     dist_s = {
         (r["node"], r["component"])
-        for r in connected_components(sdf, local_edge_limit=0).collect()
+        for r in connected_components(sdf, local_limit=0).collect()
     }
     assert local_s == dist_s
+
+
+def test_connected_components_cap_raises_when_distributed(spark):
+    """A distributed run that hits max_iter with labels still changing
+    must raise, not return partial components: a 31-node chain has
+    diameter 30, more rounds than the default cap of 25."""
+    from dbt_omnata_push_spark.llmops.dedup import connected_components
+
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=25"):
+        connected_components(df, local_limit=0)
+    dist = connected_components(df, max_iter=40, local_limit=0).collect()
+    local = connected_components(df).collect()
+    assert set(map(tuple, dist)) == set(map(tuple, local))
+    assert set(map(tuple, local)) == {(i, 0) for i in range(31)}
 
 
 def test_pagerank_local_equals_distributed(spark):
@@ -240,16 +257,10 @@ def test_pagerank_local_equals_distributed(spark):
         (r["doc_id"], r["rank"])
         for r in pair_graph_pagerank(df, iters=3).collect()
     }
-    import os as _os
-
-    _os.environ["SPARK_GRAFT_CC_LOCAL_EDGES"] = "0"
-    try:
-        dist = {
-            (r["doc_id"], r["rank"])
-            for r in pair_graph_pagerank(df, iters=3).collect()
-        }
-    finally:
-        del _os.environ["SPARK_GRAFT_CC_LOCAL_EDGES"]
+    dist = {
+        (r["doc_id"], r["rank"])
+        for r in pair_graph_pagerank(df, iters=3, local_limit=0).collect()
+    }
     assert local == dist and len(local) > 0
 
 
@@ -351,39 +362,3 @@ def test_quantize_binds_amax_once_per_row(spark):
     plan = quantize_int8(df)._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("array_max(transform(") == 1, plan[:600]
     assert "Generate" in plan
-
-
-def test_pagerank_convergence_stops_by_graph_shape(spark):
-    """Observation-based rank-delta stop (judge r4 #6): a regular
-    triangle starts AT the stationary distribution (uniform rank is the
-    fixpoint for a 2-regular graph) and stops after one verification
-    round, while a star's bipartite oscillation needs tens of rounds —
-    the converged variant adapts the iteration count to the graph
-    instead of a caller guess, and its final ranks are bit-identical to
-    the fixed-iter recurrence run for the same number of rounds."""
-    from dbt_omnata_push_spark.llmops.dedup import (
-        pair_graph_pagerank,
-        pair_graph_pagerank_converged,
-    )
-
-    triangle = [(0, 1), (1, 2), (0, 2)]
-    star = [(10, 10 + i) for i in range(1, 7)]
-    mk = lambda pairs: spark.createDataFrame(pairs, "doc_a long, doc_b long")
-
-    tri_df, tri_rounds = pair_graph_pagerank_converged(mk(triangle), max_iter=80)
-    star_df, star_rounds = pair_graph_pagerank_converged(mk(star), max_iter=80)
-    assert tri_rounds == 1  # uniform rank is already the 2-regular fixpoint
-    assert tri_rounds < star_rounds < 80
-
-    # converged result == fixed-iter oracle recurrence at the same count
-    fixed = pair_graph_pagerank(mk(star), iters=star_rounds)
-    conv = {r.doc_id: r.rank for r in star_df.collect()}
-    assert conv == {r.doc_id: r.rank for r in fixed.collect()}
-
-
-def test_pagerank_convergence_empty_graph(spark):
-    from dbt_omnata_push_spark.llmops.dedup import pair_graph_pagerank_converged
-
-    empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    df, rounds = pair_graph_pagerank_converged(empty, max_iter=10)
-    assert df.count() == 0 and rounds == 1
