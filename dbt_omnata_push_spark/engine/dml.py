@@ -48,6 +48,7 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from .session import local_frame
 from .sqlfront import _split_top_level_args, transpile
 
 # ---------------------------------------------------------------------------
@@ -287,7 +288,7 @@ def _refuse_dynamic(engine, table: str, verb: str) -> None:
 
 def _summary(engine, **counts) -> DataFrame:
     cols = ", ".join(f"{k} long" for k in counts)
-    return engine.spark.createDataFrame([tuple(counts.values())], cols)
+    return local_frame(engine.spark, [tuple(counts.values())], cols)
 
 
 def _obs_count(df: DataFrame):
@@ -527,7 +528,8 @@ def _insert_multi(engine, sql: str) -> DataFrame:
             )
             engine.store.append(engine.spark, table, aligned)
             results[table] = results.get(table, 0) + get_n()
-    return engine.spark.createDataFrame(
+    return local_frame(
+        engine.spark,
         sorted(results.items()), "table string, rows_inserted long"
     )
 
@@ -1167,7 +1169,8 @@ def _show(engine, sql: str) -> DataFrame:
             for n, p in engine.store.policies().items()
             if p.get("kind") == "masking"
         )
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows, "name string, param string, returns string, body string"
         )
     if _SHOW_RA_POLICIES_RE.match(s):
@@ -1180,7 +1183,8 @@ def _show(engine, sql: str) -> DataFrame:
             for n, p in engine.store.policies().items()
             if p.get("kind") == "row_access"
         )
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows, "name string, signature string, body string"
         )
     m = _SHOW_COLUMNS_RE.match(s)
@@ -1207,7 +1211,8 @@ def _show(engine, sql: str) -> DataFrame:
             )
             for i, f in enumerate(df.schema.fields)
         ]
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows,
             "table_name string, column_name string, ordinal int, "
             "data_type string, nullable boolean, masking_policy string, "
@@ -1218,7 +1223,8 @@ def _show(engine, sql: str) -> DataFrame:
             (n, st["table"], st["offset"])
             for n, st in engine.store.streams().items()
         )
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows, "name string, table_name string, offset long"
         )
     if _SHOW_VARIABLES_RE.match(s):
@@ -1226,14 +1232,16 @@ def _show(engine, sql: str) -> DataFrame:
             (n, str(v), type(v).__name__)
             for n, v in engine.session_vars.items()
         )
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows, "name string, value string, type string"
         )
     if _SHOW_VIEWS_RE.match(s):
         rows = sorted(
             (n, v["sql"]) for n, v in engine.store.views().items()
         )
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows, "name string, definition string"
         )
     if _SHOW_DTS_RE.match(s):
@@ -1249,7 +1257,8 @@ def _show(engine, sql: str) -> DataFrame:
             )
             for n, d in engine.store.dynamic_tables().items()
         )
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows,
             "name string, state string, target_lag string, "
             "last_refresh string, definition string",
@@ -1267,7 +1276,8 @@ def _show(engine, sql: str) -> DataFrame:
             )
             for n, t in engine.store.tasks().items()
         )
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows,
             "name string, state string, after string, schedule string, "
             "condition string, definition string, last_run string",
@@ -1277,7 +1287,8 @@ def _show(engine, sql: str) -> DataFrame:
             (n, sq["start"], sq["increment"], sq["counter"])
             for n, sq in engine.store.sequences().items()
         )
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows,
             "name string, start long, increment long, next_value long",
         )
@@ -1296,7 +1307,8 @@ def _show(engine, sql: str) -> DataFrame:
                     rows.append(
                         (logical, pk["name"], ", ".join(pk["columns"]))
                     )
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             rows, "table_name string, constraint_name string, columns string"
         )
     if not _SHOW_RE.match(s):
@@ -1320,7 +1332,8 @@ def _show(engine, sql: str) -> DataFrame:
     for name in sorted(engine.seeds):
         prior = by_name.get(name)
         by_name[name] = (name, "seed", None, prior[3] if prior else None)
-    return engine.spark.createDataFrame(
+    return local_frame(
+        engine.spark,
         sorted(by_name.values()),
         "name string, kind string, partition_by string, version long",
     )
@@ -1336,7 +1349,8 @@ def _describe(engine, sql: str) -> DataFrame:
         return engine.store.history(engine.spark, table)
     pcol = engine.store.partition_by(table)
     df = engine.store.read(engine.spark, table)
-    return engine.spark.createDataFrame(
+    return local_frame(
+        engine.spark,
         [
             (
                 f.name,
@@ -1381,7 +1395,7 @@ def _optimize(engine, sql: str) -> DataFrame:
         else None
     )
     n_files = compact(engine.spark, engine.store, table, zorder_by=zcols)
-    return engine.spark.createDataFrame([(n_files,)], "num_files long")
+    return local_frame(engine.spark, [(n_files,)], "num_files long")
 
 
 def _vacuum(engine, sql: str) -> DataFrame:
@@ -1394,7 +1408,8 @@ def _vacuum(engine, sql: str) -> DataFrame:
     before = len(engine.store.versions(table))
     engine.store.vacuum(table, retain_hours=retain)
     after = len(engine.store.versions(table))
-    return engine.spark.createDataFrame(
+    return local_frame(
+        engine.spark,
         [(before - after,)], "versions_removed long"
     )
 
@@ -1406,7 +1421,7 @@ def _restore(engine, sql: str) -> DataFrame:
         raise ValueError(f"unparsable RESTORE statement: {s[:80]}")
     table = _resolve_table(engine, m.group(1))
     new_v = engine.store.restore(table, int(m.group(2)))
-    return engine.spark.createDataFrame([(new_v,)], "restored_as_version long")
+    return local_frame(engine.spark, [(new_v,)], "restored_as_version long")
 
 
 # ---------------------------------------------------------------------------
@@ -2248,7 +2263,8 @@ def _alter_dynamic(engine, sql: str) -> DataFrame:
     verb = m.group(2).lower()
     if verb == "refresh":
         status = engine.refresh_dynamic_table(name)
-        return engine.spark.createDataFrame(
+        return local_frame(
+            engine.spark,
             [(name.lower(), status)], "name string, status string"
         )
     engine.store.set_dynamic_table_state(

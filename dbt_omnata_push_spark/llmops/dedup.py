@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..engine.session import local_frame
 from .gate import checkpoint_gate
 
 DEFAULT_NUM_PERM = 8
@@ -402,7 +403,7 @@ def _cc_local(pairs: DataFrame, pdf) -> DataFrame:
         ]
     )
     if len(pdf) == 0:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     idx = pd.Index(
         np.sort(
             pd.unique(pd.concat([pdf["a"], pdf["b"]], ignore_index=True))
@@ -427,7 +428,7 @@ def _cc_local(pairs: DataFrame, pdf) -> DataFrame:
     out = pd.DataFrame(
         {"node": idx.values, "component": idx.values[label]}
     )
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 def connected_components(
@@ -648,7 +649,7 @@ def _pagerank_local(
         ]
     )
     if len(pdf) == 0:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     idx = pd.Index(
         pd.unique(pd.concat([pdf["a"], pdf["b"]], ignore_index=True))
     )
@@ -670,7 +671,7 @@ def _pagerank_local(
         np.add.at(contrib, dst, rank[src] // deg[src])
         rank = base + (85 * contrib) // 100
     out = pd.DataFrame({"doc_id": idx.values, "rank": rank})
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 def pair_graph_pagerank(

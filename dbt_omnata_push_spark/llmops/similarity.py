@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..engine.session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -934,7 +936,8 @@ def lsh_near_dup_pairs(
     first = emb.select(vec_col).first()
     if first is None or first[0] is None:
         # empty embeddings table: typed empty pair frame, not a TypeError
-        return emb.sparkSession.createDataFrame(
+        return local_frame(
+            emb.sparkSession,
             [], "vec_a bigint, vec_b bigint, sim double"
         )
     dim = len(first[0])

@@ -87,7 +87,10 @@ def materialize_tracking_table(engine, model) -> RunResult:
         backup/CTAS/drop-backup dance (lines 19-27) collapses into the
         store's version-pointer swap
     (c) else                  -> upsert on unique_key with schema
-        widening (lines 28-35)
+        widening (lines 28-35); an empty build that widens nothing
+        commits NOTHING, as an empty incremental delta does (r12):
+        the push models' own builds are empty, and a 0-row merge would
+        cut a new version of each tracking table every run
     Full refresh obeys var 'drop-omnata-task-tables', NOT --full-refresh
     (line 5) — the tables must survive a normal full refresh.
     """
@@ -108,10 +111,26 @@ def materialize_tracking_table(engine, model) -> RunResult:
         key = model.config.get("unique_key")
         if not key:
             raise ValueError(f"tracking_table {model.name} requires unique_key")
+        out = engine.store.read(engine.spark, model.name)
+        if _same_columns(out, df) and df.isEmpty():
+            engine._publish(model.name, out, nonstore=False)
+            return RunResult(
+                model.name,
+                "success",
+                rows_affected=out.count(),
+                message="empty tracking-table build — no commit",
+            )
         engine.store.merge_upsert(engine.spark, model.name, df, key)
     out = engine.store.read(engine.spark, model.name)
     engine._publish(model.name, out, nonstore=False)
     return RunResult(model.name, "success", rows_affected=out.count())
+
+
+def _same_columns(target, df) -> bool:
+    """Every column of ``df`` exists in ``target`` with the same type,
+    so merging no rows of ``df`` would not widen the schema either."""
+    types = {f.name: f.dataType for f in target.schema.fields}
+    return all(types.get(f.name) == f.dataType for f in df.schema.fields)
 
 
 def high_watermark_incremental(ctx: Context, df, watermark_col: str):

@@ -8,6 +8,11 @@ D1, D4-D8):
   single-partition window);
 - deterministic log-entry ids sha2(job_id:row_idx) instead of
   UUID_STRING() so task retries dedupe (SURVEY.md §7 hard-part 1);
+- the model's records are evaluated once per run: one eager
+  localCheckpoint at the top of each pipeline feeds the empty-load
+  probe (an Observation riding the checkpoint job), the row index and
+  the push stage, so an expensive model (an anti-join over the whole
+  log table) never re-runs and the index numbers the rows pushed;
 - tasks+logs double-write replaces Snowflake's multi-table INSERT ALL
   (no Spark equivalent; the result DataFrame is persisted so both
   writes share one computation).
@@ -18,12 +23,13 @@ from __future__ import annotations
 import json
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..connectors.base import get_connector
 from ..engine.dag import RunResult
+from ..engine.session import local_frame
 from ..ops.batching import DEFAULT_BATCH_SIZE
 from ..ops.gpg import encrypt_batch, gpg_session_params, json_records_to_csv
 from ..ops.retry import RetryPolicy
@@ -51,6 +57,17 @@ def _records_json(df: DataFrame) -> DataFrame:
     dtype = df.schema.fields[0].dataType.typeName()
     rec = col if dtype == "string" else F.to_json(col)
     return df.select(rec.alias("record"))
+
+
+def _evaluate_once(records: DataFrame) -> tuple[DataFrame, int]:
+    """Materialize the model's records once: ``(checkpointed, rows)``.
+    The row count rides the checkpoint job as an Observation, so the
+    empty-load probe costs no job of its own."""
+    obs = Observation()
+    checkpointed = records.observe(
+        obs, F.count(F.lit(1)).alias("n")
+    ).localCheckpoint(eager=True)
+    return checkpointed, int(obs.get["n"])
 
 
 # ---------------------------------------------------------------------------
@@ -90,9 +107,10 @@ def materialize_load_task(engine, model) -> RunResult:
 
 def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> RunResult:
     cfg = model.config
-    # Empty-load short-circuit (salesforce.sql:5-18 / load_task:11-25):
-    # probe only when not full-refreshing; isEmpty is a limit-1 scan.
-    if not engine.vars.get("full-refresh-salesforce", False) and records.isEmpty():
+    records, n_records = _evaluate_once(records)
+    # Empty-load short-circuit (salesforce.sql:5-18 / load_task:11-25),
+    # skipped when full-refreshing.
+    if not engine.vars.get("full-refresh-salesforce", False) and not n_records:
         return RunResult(model.name, "skipped", message="empty load, no-op")
 
     connector = get_connector("salesforce", cfg, engine.vars)
@@ -108,7 +126,8 @@ def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> Ru
     # (2) task row (salesforce_bulk_load.sql:21-31).
     tasks_tbl = tracking.ensure_tracking_table(engine, tracking.SFDC_LOAD_TASKS)
     spark = engine.spark
-    task_row = spark.createDataFrame(
+    task_row = local_frame(
+        spark,
         [
             (
                 job_id,
@@ -164,10 +183,10 @@ def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> Ru
                 {"row_idx": pdf["row_idx"], "record": recs, "result": results}
             )
 
-    # Persist + materialize before the merge: merge_upsert evaluates its
-    # source twice (distinct-keys subtree + union subtree); without a
-    # materialized barrier every record would be pushed to the remote API
-    # twice per run.
+    # Persist + materialize the push results before the merge. The
+    # records are already checkpointed, but this stage calls the remote
+    # API: any re-evaluation of it (by the merge, or by a later change
+    # to it) would push every record again.
     pushed = indexed.mapInPandas(push_batches, _PUSH_SCHEMA).persist()
     n = pushed.count()
     logs = pushed.select(
@@ -192,7 +211,8 @@ def _salesforce_bulk_load(engine, model, records: DataFrame, legacy=False) -> Ru
 
     # (4) close job + UPDATE...FROM (salesforce_bulk_load.sql:51-56).
     close_meta = connector.close_job(job_id)
-    patch = spark.createDataFrame(
+    patch = local_frame(
+        spark,
         [(job_id, json.dumps(close_meta))], "job_id string, close_metadata string"
     )
     engine.store.update_from(
@@ -224,7 +244,8 @@ def _marketing_cloud_upload(engine, model, records: DataFrame) -> RunResult:
     connector.ensure_data_extension(manage_cfg)
 
     # Empty-load short-circuit (marketing_cloud.sql:5-18).
-    if not engine.vars.get("full-refresh-marketing-cloud", False) and records.isEmpty():
+    records, n_records = _evaluate_once(records)
+    if not engine.vars.get("full-refresh-marketing-cloud", False) and not n_records:
         return RunResult(model.name, "skipped", message="empty load, no-op")
 
     job_id = str(uuid.uuid4())
@@ -238,12 +259,10 @@ def _marketing_cloud_upload(engine, model, records: DataFrame) -> RunResult:
     # (2) global 1-based numbering (upload.sql:56; zipWithIndex-style,
     # never a null-partition window) + batch-of-100 (line 57).
     batch_size = int(cfg.get("batch_size", DEFAULT_BATCH_SIZE))
-    # Persist + materialize the index assignment: it feeds two separate
-    # actions (staging and result fetch), and a recomputation across a
-    # shuffle could assign different row numbers, mis-associating per-row
-    # results with records.
-    indexed = with_global_index(records, "row_idx", one_based=True).persist()
-    n_records = indexed.count()
+    # The index feeds two separate actions (staging and result fetch).
+    # It numbers the checkpointed records, so both recompute the same
+    # row numbers and per-row results stay with their records.
+    indexed = with_global_index(records, "row_idx", one_based=True)
     batched = indexed.withColumn(
         "batch_number", F.floor(F.col("row_idx") / batch_size).cast("int")
     )
@@ -276,7 +295,6 @@ def _marketing_cloud_upload(engine, model, records: DataFrame) -> RunResult:
     if not stage_ids:
         # full-refresh on an empty model: nothing staged -> no-op instead
         # of crashing on stage_ids[0].
-        indexed.unpersist()
         return RunResult(model.name, "skipped", message="empty load, no-op")
     # any_value collapse (upload.sql:64-66) assumes the staging calls share
     # ONE staged-query id per load; a connector returning per-batch ids
@@ -293,7 +311,6 @@ def _marketing_cloud_upload(engine, model, records: DataFrame) -> RunResult:
     handle = connector.start_import(import_params, stage_id)
     ok = connector.wait_for_import(handle)
     if not ok:
-        indexed.unpersist()
         return RunResult(model.name, "error", message="import poll failed")
 
     # (5) per-row results (SFMC_FETCH_RESULTS, upload.sql:70-84) — batched
@@ -331,7 +348,8 @@ def _marketing_cloud_upload(engine, model, records: DataFrame) -> RunResult:
     logs_tbl = tracking.ensure_tracking_table(
         engine, tracking.SFMC_LOAD_TASK_LOGS
     )
-    task_row = spark.createDataFrame(
+    task_row = local_frame(
+        spark,
         [
             (
                 job_id,
@@ -354,7 +372,6 @@ def _marketing_cloud_upload(engine, model, records: DataFrame) -> RunResult:
         spark, logs_tbl, logs, "job_log_entry_id"
     )
     results.unpersist()
-    indexed.unpersist()
     return RunResult(
         model.name, "success", rows_affected=n_records, extra={"job_id": job_id}
     )

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..engine.catalog import load_table
+from ..engine.session import local_frame
 from ..llmops import dedup as D
 from ..llmops import similarity as S
 from ..llmops import text as T
@@ -869,7 +870,8 @@ def bpe_vocab_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("text")
     merges = bpe_train(word_freq_table(docs), n_merges=8)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges, "round int, sym_a string, sym_b string, pair_count long"
     )
 
@@ -912,7 +914,8 @@ def bpe_vocab_merges_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
         word_freq_table(docs), n_merges=_BPE_DEEP_MERGES, checkpoint_every=16
     )
     prefix = [m for m in merges if m[0] <= _BPE_DEEP_PREFIX]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         prefix, "round int, sym_a string, sym_b string, pair_count long"
     )
 

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine.catalog import load_table
+from ..engine.session import local_frame
 from ..ops.rownum import with_global_index, with_ordered_global_index
 from . import query
 
@@ -1972,7 +1973,8 @@ def events_salted_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [
             ("click", "engagement"),
             ("view", "engagement"),
@@ -3772,7 +3774,8 @@ def orders_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["column_name"]
         for r in engine.query("show columns in ord_ev").collect()
     ]
-    schema_row = spark.createDataFrame(
+    schema_row = local_frame(
+        spark,
         [("schema", ",".join(cols), 0, 0)],
         "era string, grp string, n long, cents long",
     )

@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..engine.session import local_frame
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -299,7 +301,8 @@ def category_rollup_stream(
     the dim must surface as its own rollup bucket, never silently drop
     events (the batch oracle carries the matching CASE ... ELSE
     'other')."""
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         list(EVENT_CATEGORY_DIM), "event_type string, category string"
     )
     ev = _events_stream(spark, sf_dir, **source_opts)
