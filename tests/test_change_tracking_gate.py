@@ -193,3 +193,15 @@ class TestAbortedCommitSidecars:
         ).collect()
         got = sorted((r["pk"], r["change_type"]) for r in rows)
         assert got == [(3, "delete")]
+
+    def test_restore_clears_stale_rows_sidecar(self, spark, engine):
+        _mk(engine, n=3)
+        engine.query("insert into t select 3, 30")
+        v = engine.store.current_version("t")
+        self._plant_stale_rows_sidecar(spark, engine, v + 1)
+        assert engine.store.restore("t", v - 1) == v + 1
+        rows = engine.store.read_changes(
+            spark, "t", v, v + 1, "pk"
+        ).collect()
+        got = sorted((r["pk"], r["v"], r["change_type"]) for r in rows)
+        assert got == [(3, 30, "delete")]

@@ -61,15 +61,22 @@ def mk_store(spark, tmp_path_factory):
 @given(
     base=_rows,
     ops=st.lists(_op, min_size=1, max_size=4),
+    # "p" runs merge/delete/append/restore on the partition-scoped path,
+    # with its partial deletion-vector carry
+    partition_by=st.sampled_from([None, "p"]),
 )
-def test_commit_sequence_preserves_every_version(spark, mk_store, base, ops):
+def test_commit_sequence_preserves_every_version(
+    spark, mk_store, base, ops, partition_by
+):
     store = mk_store()
 
     def to_df(rows):
-        return spark.createDataFrame(rows or [(0, 0)][:0], "k long, v long")
+        return spark.createDataFrame(
+            [(k, v, k % 3) for k, v in rows], "k long, v long, p long"
+        )
 
     base_rows = _dedupe_last_wins(base)
-    store.create(spark, "t", to_df(base_rows))
+    store.create(spark, "t", to_df(base_rows), partition_by=partition_by)
     history = [sorted(base_rows)]  # model: per-version row multisets
 
     for op in ops:

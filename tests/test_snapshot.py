@@ -180,6 +180,26 @@ def test_closed_history_files_are_hard_linked_not_rewritten(spark, store):
     assert len(new) > 0 and set(new) - set(old)
 
 
+def test_dv_deleted_closed_row_stays_deleted_after_next_round(spark, store):
+    """A snapshot round hard-links closed history, so it must carry the
+    closed partition's deletion-vector rows with it."""
+    snapshot_apply(spark, store, "dim",
+                   _src(spark, [(1, "a", 1.0), (2, "b", 2.0)]), "id",
+                   snapshot_ts=TS1)
+    snapshot_apply(spark, store, "dim",
+                   _src(spark, [(1, "a", 9.0), (2, "b", 2.0)]), "id",
+                   snapshot_ts=TS2)
+    assert store.delete_where(
+        spark, "dim", (F.col("id") == 1) & ~F.col("dbt_is_current")
+    ) == 1
+    snapshot_apply(spark, store, "dim",
+                   _src(spark, [(1, "a", 9.0), (2, "z", 2.0)]), "id",
+                   snapshot_ts=TS3)
+    rows = [(r.id, str(r.dbt_valid_from), r.dbt_is_current)
+            for r in _hist(spark, store).collect()]
+    assert rows == [(1, TS2, True), (2, TS1, False), (2, TS3, True)]
+
+
 def test_engine_dispatch_snapshot_materialization(spark, tmp_path):
     store = TableStore(str(tmp_path / "wh"))
     eng = Engine(spark, store, vars={"snapshot_ts": TS1})

@@ -564,20 +564,28 @@ def test_vacuum_time_retention(spark, tmp_path):
 
 
 def test_shallow_clone_zero_copy_and_independent(spark, tmp_path):
-    """r7 Delta SHALLOW CLONE parity: clone shares inodes (O(metadata)),
-    carries pending DV deletes, and diverges independently afterwards."""
+    """Zero-copy clone (Delta SHALLOW CLONE / Snowflake CLONE parity):
+    the clone shares inodes (O(metadata)), carries pending DV deletes,
+    keeps the source's constraints and primary key, and diverges
+    independently afterwards."""
     import os
+
+    import pytest
 
     store = TableStore(str(tmp_path / "cl"))
     df = spark.range(50).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
     store.create(spark, "src", df)
+    store.add_check_constraint("src", "v_nonneg", "v >= 0")
+    store.set_primary_key("src", "pk_src", ["k"])
     store.delete_where(spark, "src", F.col("k") >= 40)  # pending DV
-    store.clone("src", "dup")
+    store.clone_table(spark, "src", "dup")
 
     # identical reads, including the merge-on-read deletes
     assert store.read(spark, "dup").count() == store.read(spark, "src").count() == 40
+    assert store.meta("dup")["constraints"] == {"v_nonneg": "v >= 0"}
+    assert store.primary_key("dup") == {"name": "pk_src", "columns": ["k"]}
 
     def inodes(table):
         out = set()
@@ -596,10 +604,48 @@ def test_shallow_clone_zero_copy_and_independent(spark, tmp_path):
     assert store.read(spark, "src").filter(F.col("k") == 0).collect()[0]["v"] == 0
     assert store.read(spark, "dup").filter(F.col("k") == 0).collect()[0]["v"] == 999
 
-    import pytest
+    with pytest.raises(ValueError):
+        store.clone_table(spark, "src", "dup")
 
-    with pytest.raises(FileExistsError):
-        store.clone("src", "dup")
+
+def test_every_commit_goes_through_commit_primitive():
+    """One commit path: the version pointer moves only inside
+    ``TableStore._commit``, and JSON documents are replaced only by
+    ``_write_json`` (plus the pointer swap and the fsync'ed swap
+    journal)."""
+    import ast
+    import pathlib
+
+    import dbt_omnata_push_spark.engine.store as store_mod
+
+    tree = ast.parse(pathlib.Path(store_mod.__file__).read_text())
+    allowed = {
+        "_set_version": {"_commit"},
+        "replace": {"_write_json", "_set_version", "swap_tables"},
+    }
+    offenders = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.FunctionDef):
+                visit(child, child.name)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in allowed
+                and (
+                    child.func.attr != "replace"
+                    or getattr(child.func.value, "id", None) == "os"
+                )
+                and fn not in allowed[child.func.attr]
+            ):
+                offenders.append(f"{fn}:{child.lineno} {child.func.attr}")
+            visit(child, fn)
+
+    visit(tree, None)
+    assert not offenders, offenders
+    assert not hasattr(store_mod.TableStore, "clone")
 
 
 def test_check_constraints_enforced_on_writes(spark, tmp_path):
